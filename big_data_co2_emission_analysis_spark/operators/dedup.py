@@ -182,12 +182,13 @@ def simhash64_frame(
     Kernel shape (measured, sf10 microbench per 10k-doc batch): the
     obvious ``unpackbits`` -> ``cumsum(axis=0)`` segmented vote walks
     the (S, 64) bit matrix column-strided and ran 2.2 s/batch -- SLOWER
-    than the JVM HOF it replaces; per-BIT ``(h >> b) & 1`` +
-    1-D ``np.add.reduceat`` keeps every pass contiguous and runs
-    0.12 s/batch (18x).  ``reduceat`` quirks are neutralized after the
-    fact: rows with zero shingles (empty segments return an arbitrary
-    element, trailing ones would index out of range) are clamped and
-    zeroed via the segment-length vector.
+    than the JVM HOF it replaces; per-BIT ``(h >> b) & 1`` + a 1-D
+    segmented sum keeps every pass contiguous (18x with
+    ``np.add.reduceat``).  The segmented sum is a difference of an
+    exclusive prefix sum, ``c[end] - c[start]``, which is exact for
+    docs with zero shingles wherever they sit (``reduceat`` returns an
+    element for an empty segment and rejects a start index at the
+    window's end).
 
     ``chunk_shingles`` bounds the kernel's per-pass working set
     (~10 B/shingle transient) and is exercised down to 1 by tests.
@@ -224,15 +225,15 @@ def simhash64_frame(
                 v = vals[off[lo] : off[hi]]
                 if len(v):
                     u = v.view(np.uint64)
-                    cnt = seg[1:] - seg[:-1]
-                    # clamp trailing empty-segment starts into range;
-                    # their garbage rows are zeroed via cnt below
-                    starts = np.minimum(seg[:-1], len(v) - 1)
+                    ends, starts = seg[1:], seg[:-1]
+                    cnt = ends - starts
+                    # per-doc bit counts as differences of an exclusive
+                    # prefix sum: exact for empty segments anywhere
+                    c = np.zeros(len(v) + 1, dtype=np.uint64)
                     ones = np.empty((hi - lo, 64), dtype=np.int64)
                     for b in range(64):
-                        x = ((u >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
-                        ones[:, b] = np.add.reduceat(x, starts)
-                    ones[cnt == 0] = 0
+                        np.cumsum((u >> np.uint64(b)) & np.uint64(1), out=c[1:])
+                        ones[:, b] = c[ends] - c[starts]
                     # votes = 2*ones - cnt; bit set iff votes > 0
                     maj = (2 * ones > cnt[:, None]).astype(np.uint8)
                     out[lo:hi] = (

@@ -208,17 +208,24 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order date).  A waiting supplier is the ONLY late shipper in a
 # multi-supplier finished order.
 #
-# r9 shape: the two correlated subqueries DE-CORRELATE into one
-# per-order supplier rollup -- for a late line by supplier s on order
-# o, EXISTS(other supplier) == n_supps >= 2 and NOT EXISTS(other LATE
-# supplier) == n_late_supps == 1 (s itself is late) -- so the flagged
-# fact is aggregated once and equi-joined back on l_orderkey instead
-# of feeding a left-semi AND a left-anti self-join.  The prior
-# three-sided self-join merged into one SMJ stage that read 2.9 GiB of
-# shuffle and spilled 9.2 GiB at sf10 (32-partition sort state); the
-# rollup + a byte-sized repartition of the orders join runs spill-FREE
-# at the same scale, values bit-identical (oracle + A/B hash).  The
-# supplier dim still broadcasts; everything keys on l_orderkey.
+# The two correlated subqueries reduce to min/max tests over the order's
+# lines.  For a late line by supplier s on order o (s is non-null: it
+# joins the supplier dim):
+#   EXISTS(l2.l_suppkey <> s)          <=>  min(l_suppkey) < max(l_suppkey)
+#   NOT EXISTS(l3.l_suppkey <> s, late) <=>  min(late_supp) = max(late_supp)
+# where late_supp = when(late, l_suppkey); s is itself among the
+# order's (late) suppliers, so "some other value exists" is exactly
+# "the extremes differ".  SQL's `<>` is NULL (false) against a NULL
+# supplier and min/max skip NULLs, so a line with a NULL l_suppkey is
+# neither an "other supplier" nor an "other late supplier" on either
+# side; likewise a NULL l_shipdate makes `late` NULL, i.e. not late.
+# So one hash aggregate keyed on l_orderkey answers both predicates,
+# with no join back to the fact: the flagged fact (lineitem x finished
+# orders) is scanned, joined and shuffled once, and numwait is the
+# order's count of non-null late_supp lines summed per waiting
+# supplier.  Once the fact join is a sort-merge join (sf1 and up) the
+# aggregate reads its order-key partitioning and adds no exchange.  The
+# supplier dim broadcasts.
 @register(
     "q21_waiting_suppliers",
     oracle="""
@@ -258,33 +265,30 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     if n is not None:
         # size the fact join's exchanges for the corpus: at the session
-        # default the SMJ sort state is what spilled 9.2 GiB (see the
-        # shape comment); partitioning both sides on the order key also
-        # lets the downstream per-order rollup run exchange-free
+        # default the SMJ sort state spilled 9.2 GiB at sf10; partitioning
+        # both sides on the order key also lets the per-order aggregate
+        # run exchange-free
         orders = orders.repartition(n, "o_orderkey")
         li = li.repartition(n, "l_orderkey")
-    flagged = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        "l_orderkey",
-        "l_suppkey",
-        (F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 75)).alias("late"),
+    late = F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 75)
+    late_supp = F.when(late, F.col("l_suppkey"))
+    per_order = (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_orderkey")
+        .agg(
+            F.min("l_suppkey").alias("lo"),
+            F.max("l_suppkey").alias("hi"),
+            F.min(late_supp).alias("late_lo"),
+            F.max(late_supp).alias("late_hi"),
+            F.count(late_supp).alias("late_lines"),
+        )
+        .filter((F.col("lo") < F.col("hi")) & (F.col("late_lo") == F.col("late_hi")))
     )
-    per_supp = flagged.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("late").alias("any_late")
-    )
-    per_order = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supps"),
-        F.sum(F.when(F.col("any_late"), 1).otherwise(0)).alias("n_late_supps"),
-    )
-    base = flagged.filter("late").select("l_orderkey", "l_suppkey")
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    waiting = (
-        base.join(per_order, "l_orderkey")
-        .filter((F.col("n_supps") >= 2) & (F.col("n_late_supps") == 1))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-    )
     return (
-        waiting.groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
+        per_order.join(F.broadcast(supp), F.col("late_lo") == F.col("s_suppkey"))
+        .groupBy("s_name")
+        .agg(F.sum("late_lines").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
         .limit(20)
     )

@@ -112,6 +112,39 @@ def test_simhash_frame_parity_tiny_chunk(spark):
     assert got == expected
 
 
+@pytest.mark.parametrize("chunk_shingles", [1, 2, 5, 64, 1 << 18])
+def test_simhash_frame_parity_empty_docs_at_batch_tail(spark, chunk_shingles):
+    """Docs with no shingles ("", NULL, whitespace) right after a real
+    doc, in one partition cut into 3-row Arrow batches, so every real
+    doc is followed by empty segments at the end of its batch: those
+    must not shorten its vote (a 2-shingle doc that lost its last
+    shingle dropped every bit both shingles set)."""
+    from big_data_co2_emission_analysis_spark.operators.dedup import simhash64_frame
+
+    rows, doc_id = [], 0
+    for i in range(60):
+        words = " ".join(f"w{(i * 7 + j) % 23}" for j in range(3 + i % 5))
+        for text in (words, "" if i % 2 else None, "   "):
+            rows.append((doc_id, text))
+            doc_id += 1
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    expected = {
+        r["doc_id"]: r["s"]
+        for r in df.select("doc_id", simhash64("text").alias("s")).collect()
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {
+            r["doc_id"]: r["simhash"]
+            for r in simhash64_frame(df, chunk_shingles=chunk_shingles).collect()
+        }
+    finally:
+        spark.conf.set(key, prior)
+    assert got == expected
+
+
 def test_ngram_jaccard_exact_values(corpus):
     pairs = ngram_jaccard_pairs(corpus, "doc_id", "text", min_jaccard=0.3)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}

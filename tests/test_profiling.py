@@ -231,7 +231,10 @@ def test_collect_metrics_all_jobs_sees_through_checkpoints(spark, sf_dir, tmp_pa
     assert all_jobs["n_rows"] == plan_only["n_rows"] > 0
     # the final plan hides the scan behind the checkpoint boundary...
     assert plan_only.get("bytes_scanned", 0) == 0
-    # ...the stage sum does not, and rows cover the full table
+    # ...the all-jobs sum does not: the scan's bytes are the table's
+    # on-disk bytes, and rows cover the full table
+    from big_data_co2_emission_analysis_spark.sources.readers import table_nbytes
+
     n_lineitem = spark.read.parquet(src).count()
-    assert all_jobs["bytes_scanned"] > 0
+    assert all_jobs["bytes_scanned"] == pytest.approx(table_nbytes(src), rel=0.1)
     assert all_jobs["output_rows_scan"] >= n_lineitem

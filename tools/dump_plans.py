@@ -70,11 +70,15 @@ SHOWCASE = [
     ),
     (
         "q21_waiting_suppliers",
-        "Q21 de-correlated (r9 shape): the EXISTS / NOT EXISTS pair is "
-        "one per-order supplier rollup (n_supps, n_late_supps) "
-        "equi-joined back on l_orderkey -- no left-semi/left-anti "
-        "self-joins, no three-sided SMJ stage; the supplier dim "
-        "broadcasts; fact-join exchanges byte-sized at scale.",
+        "Q21 as one per-order min/max aggregate: the EXISTS / NOT "
+        "EXISTS pair reduces to min(l_suppkey) < max(l_suppkey) and "
+        "min(late_supp) = max(late_supp) over the order's lines, so "
+        "the flagged fact is scanned, joined and shuffled once, with "
+        "no join back.  Here the small orders side broadcasts and the "
+        "aggregate shuffles on l_orderkey; from sf1 the fact join is a "
+        "sort-merge join whose order-key partitioning the aggregate "
+        "reuses.  The supplier dim broadcasts; fact-join exchanges are "
+        "byte-sized at scale.",
     ),
     (
         "scd2_customer_order_history",
